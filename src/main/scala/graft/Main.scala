@@ -62,18 +62,18 @@ object Main {
       case s if s.startsWith("salted-hot") =>
         // skew handling with ZERO extra scans: hot tiles come from a
         // PREVIOUS run's persisted --tiles output (the crawl-cycle steady
-        // state) instead of the adaptive mode's counting pass
+        // state), not from a counting pass over the corpus
         val n = s.split(":").lift(1).map(_.toInt).getOrElse(8)
         val statsPath = opts.getOrElse("hot-tiles",
           sys.error("--mode salted-hot requires --hot-tiles <tile-stats dir>"))
         val z = opts.getOrElse("zoom", "8").toInt
         val threshold = opts.getOrElse("hot-threshold", "1000000").toLong
-        SpatialJoin.ShuffleSaltedHot(n,
+        SpatialJoin.Salted(n, Some(SpatialJoin.HotTiles(
           SpatialJoin.hotTilesFromStats(
-            spark.read.parquet(statsPath), z, threshold), z)
+            spark.read.parquet(statsPath), z, threshold), z)))
       case s if s.startsWith("salted") =>
         val n = s.split(":").lift(1).map(_.toInt).getOrElse(8)
-        SpatialJoin.ShuffleSalted(n)
+        SpatialJoin.Salted(n)
       case other => sys.error(s"unknown --mode $other")
     }
 

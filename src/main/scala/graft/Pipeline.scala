@@ -72,7 +72,7 @@ object Pipeline {
     // consumers; free in-sandbox where the page cache absorbs the second
     // read, but a doubling of the dominant IO cost on a real object-store
     // corpus. PipelineSpec asserts the plan now contains exactly one scan
-    // of the pages relation; FlagshipProbe A/B on the 8M corpus: one-pass
+    // of the pages relation; A/B on the 8M corpus: one-pass
     // 5.31 s / scan control 3.19 s (ratio 0.60) vs round-4 two-pass
     // 5.0-5.6 s / scan 3.5 s (0.62) — parity even where the page cache
     // makes the second scan free, strictly one html read where it is not.)

@@ -208,9 +208,8 @@ object TextExtract {
 
   // --- ASCII byte-level twins of stripTags + the counting pass.
   // countTokensAsciiFused is the extractTokenCount fast path (one scan);
-  // countTokensAsciiTwoPass is the pre-fusion strip-then-count form, kept
-  // as the parity reference the TextSpec fuzz pins the fused machine
-  // against (in addition to the authoritative string-path oracle). ---
+  // the TextSpec fuzz pins it against the pre-fusion strip-then-count
+  // form (test sources) and the authoritative string-path oracle. ---
 
   /** Fused single-pass ASCII counter: the strip dispatch runs directly on
     * the raw bytes and every surviving content byte feeds a tiny
@@ -370,7 +369,7 @@ object TextExtract {
     }
   }
 
-  @inline private def startsWithCIB(s: Array[Byte], i: Int, word: String): Boolean = {
+  @inline private[core] def startsWithCIB(s: Array[Byte], i: Int, word: String): Boolean = {
     if (i + word.length > s.length) return false
     var k = 0
     while (k < word.length) {
@@ -382,7 +381,7 @@ object TextExtract {
     true
   }
 
-  @inline private def indexOfCIB(s: Array[Byte], from: Int, word: String): Int = {
+  @inline private[core] def indexOfCIB(s: Array[Byte], from: Int, word: String): Int = {
     var i = from
     val limit = s.length - word.length
     while (i <= limit) {
@@ -392,96 +391,13 @@ object TextExtract {
     -1
   }
 
-  // round-6: the strip-pass scratch buffer is thread-local (grown on
-  // demand), not a fresh 1-4 KB allocation per row — extractTokenCount is
-  // the per-row invariant of a 10^12-row corpus, and this pass is its only
-  // remaining allocation. Safe: countTokensAscii never nests or escapes
-  // the buffer.
-  private val tlStripBuf = new ThreadLocal[Array[Byte]] {
-    override def initialValue(): Array[Byte] = new Array[Byte](8192)
-  }
-
-  /** Pre-fusion reference (strip-to-buffer, then count). PRECONDITION:
-    * all-ASCII input (the old pre-pass guaranteed it). Used only by the
-    * TextSpec parity fuzz against [[countTokensAsciiFused]]. */
-  private[core] def countTokensAsciiTwoPass(s: Array[Byte]): Int = {
-    // pass 1: strip tags + script/style blocks into a byte buffer
-    var buf = tlStripBuf.get()
-    if (buf.length < s.length) {
-      // next power of two, overflow-safe: for inputs >= 2^30 bytes the
-      // doubled size would wrap Int, so fall back to the exact length
-      val doubled = Integer.highestOneBit(s.length) * 2
-      buf = new Array[Byte](if (doubled < s.length) s.length else doubled)
-      tlStripBuf.set(buf)
-    }
-    var blen = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (c == '<') {
-        var dropped = false
-        var w = 0
-        while (!dropped && w < 2) {
-          val name = if (w == 0) "script" else "style"
-          if (startsWithCIB(s, i + 1, name) &&
-              (i + 1 + name.length == s.length ||
-               !isAsciiLetterOrDigit(s(i + 1 + name.length)))) {
-            val close = "</" + name + ">"
-            val end = indexOfCIB(s, i, close)
-            i = if (end < 0) s.length else end + close.length
-            dropped = true
-          }
-          w += 1
-        }
-        if (!dropped) {
-          var gt = i + 1
-          while (gt < s.length && s(gt) != '>') gt += 1
-          i = if (gt >= s.length) s.length else gt + 1
-        }
-      } else {
-        buf(blen) = c; blen += 1
-        i += 1
-      }
-    }
-    // pass 2: entity decode + whitespace collapse, counting only
-    var spaces = 0
-    var pendingSpace = false
-    var started = false
-    @inline def emitCp(cp: Int): Unit = {
-      // int overload == per-char semantics here: all whitespace codepoints
-      // are BMP, and surrogate halves of supplementary chars are never
-      // whitespace either way
-      if (Character.isWhitespace(cp)) { if (started) pendingSpace = true }
-      else {
-        if (pendingSpace) { spaces += 1; pendingSpace = false }
-        started = true
-      }
-    }
-    i = 0
-    while (i < blen) {
-      val c = buf(i)
-      if (c == '&') {
-        var semi = -1
-        var j = i + 1
-        while (semi < 0 && j < blen && j - i <= 10) {
-          if (buf(j) == ';') semi = j
-          j += 1
-        }
-        val cp = if (semi < 0) -1 else entityCodepointAscii(buf, i + 1, semi)
-        if (cp >= 0) { emitCp(cp); i = semi + 1 }
-        else { emitCp('&'); i += 1 }
-      } else { emitCp(c); i += 1 }
-    }
-    spaces + 1
-  }
-
-  @inline private def isAsciiLetterOrDigit(b: Byte): Boolean =
+  @inline private[core] def isAsciiLetterOrDigit(b: Byte): Boolean =
     (b >= '0' && b <= '9') || (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')
 
   /** Byte twin of [[entityReplacement]], returning the decoded CODEPOINT
     * (all five named entities and valid numeric references decode to one
     * codepoint) or -1 when the body is not a recognized entity. */
-  private def entityCodepointAscii(s: Array[Byte], from: Int, to: Int): Int = {
+  private[core] def entityCodepointAscii(s: Array[Byte], from: Int, to: Int): Int = {
     val len = to - from
     @inline def is(word: String): Boolean = {
       if (len != word.length) return false

@@ -53,9 +53,9 @@ object Dedup {
     * per-row form also rebuilds the shingle array once PER SEED (no
     * common-subexpression elimination in interpreted eval — thread dumps
     * of the r1-r4 shape at 1M docs show Concat.eval/StringSplit
-    * nullSafeEval, not generated code). Measured honestly (CapProbe,
-    * 100k×120-word docs, min of 3): HOF 5.54 s vs explode+agg 5.16 s —
-    * the md5 work itself dominates at this width, so the win is ~7% plus
+    * nullSafeEval, not generated code). Measured honestly (100k×120-word
+    * docs, min of 3): HOF 5.54 s vs explode+agg 5.16 s — the md5 work
+    * itself dominates at this width, so the win is ~7% plus
     * the structural properties: the md5 pipeline stays inside whole-stage
     * codegen, shingles are built once regardless of numHashes (the gap
     * widens with more seeds), and partial aggregation collapses the
@@ -125,8 +125,7 @@ object Dedup {
     * oversize key set — tiny after map-side partial aggregation, at most
     * N/maxBucket entries by construction — and broadcast-anti-join it
     * away. Replaces the r1-r4 `count(*) over (partition by keys)` window
-    * form: A/B'd on 20M skewed banded rows (CapProbe, min of 3 interleaved
-    * reps): anti 2.82 s vs window 3.42 s, and the window's per-partition
+    * form: A/B'd on 20M skewed banded rows (min of 3 interleaved reps): anti 2.82 s vs window 3.42 s, and the window's per-partition
     * SORT of the full relation disappears — the part that grows worst at
     * the 100-TB tier. Emitted rows are identical (q_dup and q_text_rolling
     * oracle hashes unchanged). */

@@ -165,7 +165,7 @@ object Similarity {
     * pair SET is unchanged, only its partitioning spreads.
     *
     * `hotBuckets` pre-declares the hot set and skips the detection count
-    * entirely — the ANN twin of SpatialJoin.ShuffleSaltedHot: bucket
+    * entirely — the ANN twin of SpatialJoin.Salted with HotTiles: bucket
     * populations are stable across crawl cycles (they depend on the
     * corpus distribution, not the queries), so a persisted bucket
     * profile from the previous cycle buys skew handling with zero extra

@@ -33,35 +33,24 @@ object SpatialJoin {
     * silently outgrows broadcast — Auto keeps the caller's plan valid
     * instead of OOMing every executor. */
   final case class Auto(maxBroadcastCells: Long = 2000000L) extends Mode
-  /** Shuffle with salted keys: points add pmod(xxhash64(key), s), the cover
-    * side is replicated s times (SURVEY.md §2.C6 skewed mega-cells). */
-  final case class ShuffleSalted(s: Int) extends Mode
-  /** Salt ONLY detected hot cells (probe count > hotThreshold, measured by
-    * a first-pass aggregation): cold cells take the plain sort-merge path,
-    * hot cells the salted path, results unioned before refine. This is the
-    * targeted form of C6 — replication cost is paid only where skew is. */
-  final case class ShuffleSaltedAdaptive(s: Int, hotThreshold: Long,
-                                         maxHot: Int = 65536) extends Mode
-  /** [[ShuffleSaltedAdaptive]] with the hot set PRE-DECLARED instead of
-    * detected: `hotTiles` are cell ids at resolution `tileZoom` (the tile
-    * grid), typically taken from a PREVIOUS run's persisted per-tile stats
-    * via [[hotTilesFromStats]]. A probe/cover cell is hot when it lies
-    * under (or over) a hot tile; hot cells take the salted path, cold the
-    * plain sort-merge path — exactly the adaptive plan, minus its
-    * detection pass. That pass is the adaptive mode's 100-TB flaw: the
-    * counting aggregation is a SECOND full scan of the probe input, which
-    * breaks the single-scan property of the flagship coverage job
-    * ([[assignRegions]]). In the crawl-cycle steady state the previous
-    * run's tile stats already exist (the flagship writes them every run),
-    * so skew handling costs zero extra scans. Empty `hotTiles` degrades to
-    * plain [[Shuffle]]. */
-  final case class ShuffleSaltedHot(s: Int, hotTiles: Seq[Long],
-                                    tileZoom: Int) extends Mode
+  /** Shuffle with salted keys (SURVEY.md §2.C6 skewed mega-cells): a hot
+    * probe row adds salt pmod(xxhash64(key), s), and the cover side is
+    * replicated s times on hot cells. `hot = None` salts every cell.
+    * `hot = Some(HotTiles(...))` salts only cells under the declared hot
+    * tiles, typically from a PREVIOUS run's persisted per-tile stats via
+    * [[hotTilesFromStats]]: in the crawl-cycle steady state those stats
+    * already exist (the flagship writes them every run), so skew handling
+    * costs zero extra scans of the probe input and keeps the single-scan
+    * property of [[assignRegions]]. An empty declared set is plain
+    * [[Shuffle]]. */
+  final case class Salted(s: Int, hot: Option[HotTiles] = None) extends Mode
+  /** Hot tiles: cell ids at resolution `zoom` (the tile grid). */
+  final case class HotTiles(tiles: Seq[Long], zoom: Int)
 
   /** Hot-tile extraction from a persisted tile-stats relation (the
     * flagship coverage output: tile_x, tile_y, pages, ...). Returns cell
     * ids at `z` for tiles whose TOTAL `countCol` exceeds `hotThreshold` —
-    * the input to [[ShuffleSaltedHot]]. Counts are summed per tile first:
+    * the input to [[Salted]]. Counts are summed per tile first:
     * the streaming coverage sink appends one row per tile PER MICRO-BATCH,
     * so a per-row threshold would miss a tile that is hot cumulatively
     * (500 pages x 100 batches) and could trip the maxHot guard on
@@ -87,38 +76,37 @@ object SpatialJoin {
       .limit(maxHot + 1).collect().map(_.getLong(0)).toSeq
     require(hot.length <= maxHot,
       s"more than $maxHot tiles exceed hotThreshold=$hotThreshold at z=$z; " +
-        "raise the threshold (salting that many cells is full ShuffleSalted)")
+        "raise the threshold (salting that many cells is Salted without a hot set)")
     hot
   }
 
-  /** Deterministic, purely cell-valued hot test for [[ShuffleSaltedHot]]
+  /** Deterministic, purely cell-valued hot test for declared [[HotTiles]]
     * (both join sides must split identically, so this depends on nothing
-    * but the cell id): a cell at resolution >= tileZoom is hot iff its
-    * tileZoom ancestor is a hot tile; a coarser cell iff it is an ancestor
-    * of one (the ancestor set is driver-computed, <= z * |hotTiles| ids).
+    * but the cell id): a cell at resolution >= zoom is hot iff its
+    * zoom ancestor is a hot tile; a coarser cell iff it is an ancestor
+    * of one (the ancestor set is driver-computed, <= z * |tiles| ids).
     * Null cells (coarse-rejected probe rows) coalesce to cold. */
-  private def hotCellPredicate(cell: Column, m: ShuffleSaltedHot): Column = {
-    val ancestors = m.hotTiles
-      .flatMap(t => (0 until m.tileZoom).map(r => Cells.parent(t, r)))
+  private def hotCellPredicate(cell: Column, h: HotTiles): Column = {
+    val ancestors = h.tiles
+      .flatMap(t => (0 until h.zoom).map(r => Cells.parent(t, r)))
       .distinct.map(Long.box)
-    val hotAtZ = GeoFunctions.cellParent(cell, lit(m.tileZoom))
-      .isInCollection(m.hotTiles.map(Long.box))
+    val hotAtZ = GeoFunctions.cellParent(cell, lit(h.zoom))
+      .isInCollection(h.tiles.map(Long.box))
     val res = shiftright(cell, 56).bitwiseAND(lit(31L))
     coalesce(
-      when(res >= m.tileZoom, hotAtZ)
+      when(res >= h.zoom, hotAtZ)
         .otherwise(if (ancestors.isEmpty) lit(false)
                    else cell.isInCollection(ancestors)),
       lit(false))
   }
 
-  /** The shared hot-cell-salted candidate plan of the salted-hot and
-    * adaptive modes, as ONE conditional-salt join — not a hot/cold
-    * two-branch union. A union would feed the probe relation to two
-    * consumers, and Spark materializes each union branch from its own
+  /** The [[Salted]] candidate plan, as ONE conditional-salt join — not a
+    * hot/cold two-branch union. A union would feed the probe relation to
+    * two consumers, and Spark materializes each union branch from its own
     * scan: the 100-TB pages input would be read twice, the exact
-    * single-scan violation these modes exist to avoid (measured on the
-    * 8M corpus, FlagshipProbe min-of-3: the union form ran the flagship
-    * at 15.2 s vs 6.2 s for this form; plain Shuffle is 6.3 s — i.e.
+    * single-scan violation a declared hot set exists to avoid (measured
+    * on the 8M corpus, min-of-3: the union form ran the flagship at
+    * 15.2 s vs 6.2 s for this form; plain Shuffle is 6.3 s — i.e.
     * conditional salting is free on unskewed data, while the union form
     * pays two scans plus doubled extract/geocode work).
     *
@@ -203,6 +191,16 @@ object SpatialJoin {
   /** Visible for the eviction test. */
   private[graft] def coverCacheSize: Int = coverCache.size()
 
+  /** One `parts` row: the packed rings (see CoverSides) and the bbox. */
+  private def partRow(rid: Long, part: Int, rings: Array[Array[Double]]) = {
+    val (latMin, latMax, lonMin, lonMax) = Geo.bbox(rings)
+    (rid, part, rings.flatten.toSeq, rings.scanLeft(0)(_ + _.length).toSeq,
+      latMin, latMax, lonMin, lonMax)
+  }
+
+  private val PartCols = Seq("region_id", "part", "rings_flat", "ring_offsets",
+    "lat_min", "lat_max", "lon_min", "lon_max")
+
   def coverDF(spark: SparkSession, parts: Seq[Polygons.PolyPart] = Polygons.all,
               rMin: Int = RMin, rMax: Int = RMax): CoverSides = {
     import spark.implicits._
@@ -213,17 +211,9 @@ object SpatialJoin {
       parts.flatMap { p =>
         Geo.cover(p.rings, rMin, rMax).map(cell => (cell, p.regionId, p.part))
       })
-    // packed rings: flat vertex array + ring offsets (see CoverSides doc)
-    val partRows = parts.map { p =>
-      val flat = p.rings.flatten
-      val offsets = p.rings.scanLeft(0)(_ + _.length)
-      (p.regionId, p.part, flat.toSeq, offsets.toSeq,
-        p.latMin, p.latMax, p.lonMin, p.lonMax)
-    }
     CoverSides(
       cellRows.toDF("cell", "region_id", "part"),
-      partRows.toDF("region_id", "part", "rings_flat", "ring_offsets",
-        "lat_min", "lat_max", "lon_min", "lon_max"),
+      parts.map(p => partRow(p.regionId, p.part, p.rings)).toDF(PartCols: _*),
       cellRows.map(r => Cells.parent(r._1, rMin)).distinct.sorted.toArray,
       cellRows.map(r => Cells.res(r._1)).distinct.sorted,
       cellRows.length.toLong, rMin, rMax)
@@ -267,13 +257,8 @@ object SpatialJoin {
       }.toDF("cell", "region_id", "part")
       .localCheckpoint(true)
     val partsDf = polys.map { case (rid, part, rings) =>
-        val arr = validated(rid, part, rings)
-        val flat = arr.flatten.toSeq
-        val offsets = arr.scanLeft(0)(_ + _.length).toSeq
-        val (latMin, latMax, lonMin, lonMax) = Geo.bbox(arr)
-        (rid, part, flat, offsets, latMin, latMax, lonMin, lonMax)
-      }.toDF("region_id", "part", "rings_flat", "ring_offsets",
-        "lat_min", "lat_max", "lon_min", "lon_max")
+        partRow(rid, part, validated(rid, part, rings))
+      }.toDF(PartCols: _*)
     // resolution lives in id bits 60..56 (Cells layout; ids are positive)
     val summary = cells.agg(
       collect_set(GeoFunctions.cellParent(col("cell"), lit(rMin))).as("cp"),
@@ -285,15 +270,6 @@ object SpatialJoin {
       summary.getLong(2), rMin, rMax)
   }
 
-  /** Assign containing regions to points. Input must carry `lat`,`lon` and
-    * a unique key column `keyCol`; output = input columns + region_id
-    * (inner; points in no region drop out), exactly one row per
-    * (point, region). */
-  /** `dedup=false` skips the final per-(key, region) dropDuplicates —
-    * correct whenever the caller's next operator absorbs duplicates (e.g.
-    * a downstream distinct/groupBy), saving one full shuffle. Duplicates
-    * only arise for multi-part regions (a point in two parts of one
-    * region). */
   /** Auto -> Broadcast | Shuffle by cover size; pass-through otherwise.
     * Driver-side only (nCells is already local), zero Spark jobs. */
   def resolveMode(mode: Mode, cover: CoverSides): Mode = mode match {
@@ -310,6 +286,50 @@ object SpatialJoin {
     * sets at high rMin). */
   final val CoarsePrefilterMax = 1000000
 
+  /** Probe rows: each point encoded at rMax (`cell_rmax`), then exploded
+    * to its parent `cell` at every resolution that OCCURS in the cover
+    * (the driver-side summary, zero job cost: a compact cover rarely uses
+    * every level — e.g. a coarse-only cover of a large region makes the
+    * explode 1x instead of (rMax-rMin+1)x per point).
+    *
+    * The coarse prefilter runs BEFORE the explode: a matching point's
+    * rMin-ancestor must be the rMin-ancestor of some cover cell, and that
+    * set is tiny (bounded by the global rMin grid) — an InSet lookup
+    * rejects most of the planet's points with one cell computation
+    * instead of a 6x row blowup + join. Skipped past CoarsePrefilterMax
+    * (the join itself is the correctness filter). Coarse-rejected points
+    * are dropped, or with `keepRejected` kept as exactly ONE null-cell row
+    * (a null join key never matches, so they ride through left joins
+    * untouched). */
+  private def probeRows(points: DataFrame, cover: CoverSides,
+                        keepRejected: Boolean): DataFrame = {
+    val cellRMax = col("cell_rmax")
+    val encoded = points.withColumn("cell_rmax",
+      GeoFunctions.cellEncode(col("lat"), col("lon"), lit(cover.rMax)))
+    val coarseOk =
+      if (cover.coarseCells.length > CoarsePrefilterMax) lit(true)
+      else GeoFunctions.cellParent(cellRMax, lit(cover.rMin))
+        .isInCollection(cover.coarseCells.map(Long.box))
+    val probeRes =
+      if (cover.resolutions.isEmpty) Seq(cover.rMin) else cover.resolutions
+    val parents = array(probeRes.map(r =>
+      GeoFunctions.cellParent(cellRMax, lit(r))): _*)
+    if (keepRejected)
+      encoded.withColumn("cell", explode(
+        when(coarseOk, parents).otherwise(array(lit(null).cast("long")))))
+    else encoded.where(coarseOk).withColumn("cell", explode(parents))
+  }
+
+  /** The exact refine of a candidate joined to its `parts` row: bbox test,
+    * then ray-cast PIP reading the packed vertex array in place (no
+    * per-row allocation). Conjuncts, so a caller can fold them behind its
+    * own guard. */
+  private def refine: Seq[Column] = Seq(
+    col("lat") >= col("lat_min"), col("lat") <= col("lat_max"),
+    col("lon") >= col("lon_min"), col("lon") <= col("lon_max"),
+    GeoFunctions.pipPacked(col("lat"), col("lon"),
+      col("rings_flat"), col("ring_offsets")))
+
   /** The candidate equi-join of probes against the cover's cells for a
     * resolved mode — the single dispatch both [[assign]] (inner) and
     * [[assignRegions]] (left: unmatched probes must survive) share, so a
@@ -317,96 +337,44 @@ object SpatialJoin {
     *
     * Shuffle pins sort-merge via the merge hint (explicit hash
     * partitioning on the cell key, AQE skew-split can kick in on hot
-    * cells). ShuffleSalted is the hot-everywhere special case of the
-    * conditional-salt join (the constant hot test folds away). The
-    * adaptive detection filters null probe cells (present in the left
-    * flavor, harmless in the inner one). */
+    * cells). Salted without a hot set is the hot-everywhere special case
+    * of the conditional-salt join (the constant hot test folds away). */
   private def candidateJoin(probes: DataFrame, cover: CoverSides,
                             keyCol: String, mode: Mode,
                             joinType: String): DataFrame = {
-    import probes.sparkSession.implicits._
+    def merge = probes.join(cover.cells.hint("merge"), Seq("cell"), joinType)
     resolveMode(mode, cover) match {
       case Auto(_) => throw new IllegalStateException("Auto resolved above")
       case Broadcast =>
         probes.join(broadcast(cover.cells), Seq("cell"), joinType)
-      case Shuffle =>
-        probes.join(cover.cells.hint("merge"), Seq("cell"), joinType)
-      case ShuffleSalted(s) =>
+      case Shuffle => merge
+      case Salted(s, None) =>
         saltedSplitJoin(probes, cover.cells, keyCol, s, _ => lit(true),
           joinType)
-      case ShuffleSaltedAdaptive(s, hotThreshold, maxHot) =>
-        // round-6 (r5 verdict "what's wrong #1"): the adaptive detection
-        // collect is now bounded — the same loud-failure contract as
-        // hotTilesFromStats. A 100-TB run with a too-low threshold must
-        // not stream an unbounded hot-key list into driver memory and an
-        // InSet literal; it fails naming the alternatives instead.
-        val hot = probes.where($"cell".isNotNull)
-          .groupBy($"cell").count()
-          .where($"count" > hotThreshold)
-          .select($"cell").orderBy($"cell")
-          .limit(maxHot + 1).collect().map(r => Long.box(r.getLong(0)))
-        require(hot.length <= maxHot,
-          s"more than $maxHot cells exceed hotThreshold=$hotThreshold; " +
-            "raise the threshold, pre-declare the hot set " +
-            "(ShuffleSaltedHot), or salt everything (ShuffleSalted)")
-        if (hot.isEmpty)
-          probes.join(cover.cells.hint("merge"), Seq("cell"), joinType)
-        else saltedSplitJoin(probes, cover.cells, keyCol, s,
-          c => c.isInCollection(hot), joinType)
-      case m @ ShuffleSaltedHot(s, hotTiles, _) =>
-        if (hotTiles.isEmpty)
-          probes.join(cover.cells.hint("merge"), Seq("cell"), joinType)
-        else saltedSplitJoin(probes, cover.cells, keyCol, s,
-          c => hotCellPredicate(c, m), joinType)
+      case Salted(_, Some(h)) if h.tiles.isEmpty => merge
+      case Salted(s, Some(h)) =>
+        saltedSplitJoin(probes, cover.cells, keyCol, s,
+          c => hotCellPredicate(c, h), joinType)
     }
   }
 
+  /** Assign containing regions to points. Input must carry `lat`,`lon` and
+    * a unique key column `keyCol`; output = input columns + region_id
+    * (inner; points in no region drop out), exactly one row per
+    * (point, region). */
   def assign(points: DataFrame, keyCol: String, cover: CoverSides,
-             mode: Mode = Auto(),
-             dedup: Boolean = true): DataFrame = {
-    import points.sparkSession.implicits._
-    val rMin = cover.rMin
-    val rMax = cover.rMax
-    // coarse prefilter BEFORE the 6-way probe explode: a matching point's
-    // rMin-ancestor must be the rMin-ancestor of some cover cell, and that
-    // set is tiny (bounded by the global rMin grid) — an InSet lookup
-    // eliminates most of the planet's points with one cell computation
-    // instead of a 6x row blowup + join. Skipped past CoarsePrefilterMax
-    // (the join itself is the correctness filter).
-    val encoded = points.withColumn("cell_rmax",
-      GeoFunctions.cellEncode($"lat", $"lon", lit(rMax)))
-    val withCell =
-      if (cover.coarseCells.length > CoarsePrefilterMax) encoded
-      else encoded.where(GeoFunctions.cellParent($"cell_rmax", lit(rMin))
-        .isInCollection(cover.coarseCells.map(Long.box)))
-    // probe only the resolutions that actually OCCUR in the cover (in the
-    // driver-side summary at zero job cost): a compact cover rarely uses
-    // every level — e.g. a coarse-only cover of a large region makes the
-    // candidate explode 1x instead of (rMax-rMin+1)x per point
-    val probeRes: Seq[Int] =
-      if (cover.resolutions.isEmpty) Seq(rMin) else cover.resolutions
-    val probes = withCell.withColumn("cell",
-      explode(array(probeRes.map(r =>
-        GeoFunctions.cellParent($"cell_rmax", lit(r))): _*)))
-
-    val candidates = candidateJoin(probes, cover, keyCol, mode, "inner")
-
-    // refine only candidates: tiny (region,part)->rings dim broadcast;
-    // PIP reads the packed vertex array in place (no per-row allocation)
-    val refined = candidates
+             mode: Mode = Auto()): DataFrame =
+    candidateJoin(probeRows(points, cover, keepRejected = false),
+        cover, keyCol, mode, "inner")
+      // tiny (region,part)->rings dim, broadcast
       .join(broadcast(cover.parts), Seq("region_id", "part"))
-      .where($"lat" >= $"lat_min" && $"lat" <= $"lat_max" &&
-             $"lon" >= $"lon_min" && $"lon" <= $"lon_max")
-      .where(GeoFunctions.pipPacked($"lat", $"lon",
-        $"rings_flat", $"ring_offsets"))
-
-    // a region can match via several parts; compact cover cells are
-    // disjoint so per part there is at most one candidate row
-    val out = refined.drop("cell", "cell_rmax", "part",
-      "rings_flat", "ring_offsets",
-      "lat_min", "lat_max", "lon_min", "lon_max")
-    if (dedup) out.dropDuplicates(keyCol, "region_id") else out
-  }
+      .where(refine.reduce(_ && _))
+      .drop("cell", "cell_rmax", "part",
+        "rings_flat", "ring_offsets",
+        "lat_min", "lat_max", "lon_min", "lon_max")
+      // a region can match via several parts; compact cover cells are
+      // disjoint so per part there is at most one candidate row
+      .dropDuplicates(keyCol, "region_id")
 
   /** One row per input point with `regions: ARRAY<BIGINT>` — the sorted set
     * of containing region ids (empty when none). This is the SINGLE-SCAN
@@ -419,58 +387,29 @@ object SpatialJoin {
     * caller this exists for).
     *
     * Plan shape: coarse-rejected points keep exactly ONE null-cell probe
-    * row (a join key of null never matches, so they ride through both
-    * joins untouched — no 6x explode where a match is impossible); all
-    * joins are LEFT; the final per-point groupBy costs the same single
-    * wide shuffle [[assign]]'s dedup pays, and its partial aggregation
-    * collapses the probe explode MAP-SIDE (plan-audited: partial
-    * collect_set under the exchange), so the shuffle carries one row per
-    * point.
-    *
-    * Single-scan caveat: ShuffleSaltedAdaptive's hot-cell detection runs
-    * a separate counting job over the probe side, i.e. a second scan of
-    * the input — callers relying on the one-scan property (the flagship
-    * coverage job) should pass [[ShuffleSaltedHot]] (hot set from a
-    * previous run's tile stats — zero extra scans, the crawl-cycle steady
-    * state), Broadcast/Shuffle/ShuffleSalted, or pre-materialize the
-    * narrow point frame. */
+    * row (no 6x explode where a match is impossible); all joins are LEFT;
+    * the final per-point groupBy costs the same single wide shuffle
+    * [[assign]]'s dedup pays, and its partial aggregation collapses the
+    * probe explode MAP-SIDE (plan-audited: partial collect_set under the
+    * exchange), so the shuffle carries one row per point. Every mode keeps
+    * the one-scan property: none runs a pass over the probe side to
+    * detect its hot set. */
   def assignRegions(points: DataFrame, keyCol: String, cover: CoverSides,
                     mode: Mode = Auto()): DataFrame = {
-    import points.sparkSession.implicits._
-    val rMin = cover.rMin
-    val rMax = cover.rMax
-    val encoded = points.withColumn("cell_rmax",
-      GeoFunctions.cellEncode($"lat", $"lon", lit(rMax)))
-    val coarseOk: Column =
-      if (cover.coarseCells.length > CoarsePrefilterMax) lit(true)
-      else GeoFunctions.cellParent($"cell_rmax", lit(rMin))
-        .isInCollection(cover.coarseCells.map(Long.box))
-    val probeRes: Seq[Int] =
-      if (cover.resolutions.isEmpty) Seq(rMin) else cover.resolutions
-    val probes = encoded.withColumn("cell",
-      explode(when(coarseOk, array(probeRes.map(r =>
-          GeoFunctions.cellParent($"cell_rmax", lit(r))): _*))
-        .otherwise(array(lit(null).cast("long")))))
-
     // null cells (coarse-rejected points) must land in exactly one salted
     // branch: saltedSplitJoin coalesces the hot test to false, so they
     // take the cold path, where a null key matches nothing and the left
     // join keeps the row
-    val candidates = candidateJoin(probes, cover, keyCol, mode, "left")
-
-    val refined = candidates
+    val candidates = candidateJoin(probeRows(points, cover, keepRejected = true),
+      cover, keyCol, mode, "left")
+    // null-propagating: unmatched rows have null region/rings, so the
+    // refine evaluates null -> coalesced to false below
+    val ok = (col("region_id").isNotNull +: refine).reduce(_ && _)
+    candidates
       .join(broadcast(cover.parts), Seq("region_id", "part"), "left")
-    // null-propagating: unmatched rows have null region/rings, so `ok`
-    // evaluates null -> coalesced to false below
-    val ok = $"region_id".isNotNull &&
-      $"lat" >= $"lat_min" && $"lat" <= $"lat_max" &&
-      $"lon" >= $"lon_min" && $"lon" <= $"lon_max" &&
-      GeoFunctions.pipPacked($"lat", $"lon", $"rings_flat", $"ring_offsets")
-    val ptCols = points.columns.map(col)
-    refined
-      .groupBy(ptCols: _*)
-      .agg(sort_array(collect_set(when(coalesce(ok, lit(false)), $"region_id")))
-        .as("regions"))
+      .groupBy(points.columns.map(col): _*)
+      .agg(sort_array(collect_set(
+        when(coalesce(ok, lit(false)), col("region_id")))).as("regions"))
   }
 
   /** LEFT-OUTER [[assign]]: every input point survives — matched points get

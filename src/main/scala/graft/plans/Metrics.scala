@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.rdd.GraftRddBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -50,22 +51,22 @@ final class StageMetricsListener extends SparkListener {
 }
 
 object Metrics {
-  /** Run `body` with a fresh stage listener attached; write the collected
-    * metrics JSON to `path` afterwards (best-effort — never fails a job). */
+  /** Run `body` with a fresh stage listener attached, then write the
+    * collected metrics JSON to `path`. A failing body writes no record and
+    * its exception propagates; a failing write fails the call. */
   def withMetrics[T](spark: SparkSession, runId: String, path: String)(body: => T): T = {
+    val sc = spark.sparkContext
     val listener = new StageMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    try body
-    finally {
-      try {
-        // listenerBus is private[spark]; a short sleep lets the async bus
-        // drain the final stage events before the snapshot
-        Thread.sleep(300)
-        val p = java.nio.file.Paths.get(path)
-        if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.writeString(p, listener.toJson(runId))
-      } catch { case _: Exception => () }
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      // the bus is asynchronous: drain it so the snapshot holds every
+      // stage the body ran
+      GraftRddBridge.waitUntilListenerBusEmpty(sc)
+      val p = java.nio.file.Paths.get(path)
+      if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, listener.toJson(runId))
+      result
+    } finally sc.removeSparkListener(listener)
   }
 }

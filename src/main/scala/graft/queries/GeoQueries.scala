@@ -168,7 +168,7 @@ object GeoQueries {
          |SELECT k, region_id FROM pip_matches WHERE region_id = 7""".stripMargin) { (s, d) =>
       // the mega region drives skew: prove the salted shuffle path returns
       // identical rows for the hot polygon
-      assigned(s, d, SpatialJoin.ShuffleSalted(8))
+      assigned(s, d, SpatialJoin.Salted(8))
         .where(col("region_id") === 7).select("k", "region_id")
     },
 
@@ -177,10 +177,10 @@ object GeoQueries {
          |${pipMatchesSql}
          |SELECT k, region_id FROM pip_matches WHERE region_id = 7""".stripMargin) { (s, d) =>
       // identical rows through the PRE-DECLARED hot/cold split
-      // (SpatialJoin.ShuffleSaltedHot): the hot set comes from a
+      // (SpatialJoin.Salted with HotTiles): the hot set comes from a
       // tile-stats relation built from the fixture points — the shape of
-      // a previous run's persisted coverage output — NOT from the
-      // adaptive mode's counting scan of the probe input
+      // a previous run's persisted coverage output — NOT from a counting
+      // scan of the probe input
       val stats = points(s, d)
         .withColumn("tile",
           GeoFunctions.cellEncode(col("lat"), col("lon"), lit(4)))
@@ -188,7 +188,7 @@ object GeoQueries {
           GeoFunctions.cellTileY(col("tile")).as("tile_y"))
         .agg(count("*").as("pages"))
       val hot = SpatialJoin.hotTilesFromStats(stats, 4, hotThreshold = 10)
-      assigned(s, d, SpatialJoin.ShuffleSaltedHot(8, hot, 4))
+      assigned(s, d, SpatialJoin.Salted(8, Some(SpatialJoin.HotTiles(hot, 4))))
         .where(col("region_id") === 7).select("k", "region_id")
     },
 

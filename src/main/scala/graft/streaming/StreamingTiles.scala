@@ -73,11 +73,11 @@ object StreamingTiles {
     * downstream aggregation (counts and token sums are additive).
     *
     * `joinMode`: the streaming deployment IS the crawl-cycle steady
-    * state [[graft.operators.SpatialJoin.ShuffleSaltedHot]] was built
-    * for — earlier snapshots in `outPath` are exactly the tile-stats
-    * relation `hotTilesFromStats` consumes, so a caller can pre-declare
-    * hot tiles from yesterday's coverage with zero extra scans of the
-    * stream. */
+    * state that [[graft.operators.SpatialJoin.Salted]] with declared hot
+    * tiles was built for — earlier snapshots in `outPath` are exactly the
+    * tile-stats relation `hotTilesFromStats` consumes, so a caller can
+    * pre-declare hot tiles from yesterday's coverage with zero extra
+    * scans of the stream. */
   def coverageSink(spark: SparkSession, pages: DataFrame, outPath: String,
                    z: Int = 8,
                    joinMode: graft.operators.SpatialJoin.Mode =

@@ -51,24 +51,24 @@ class PipelineSpec extends SparkTestBase {
     val b = run(SpatialJoin.Broadcast)
     assert(b.nonEmpty)
     assert(run(SpatialJoin.Shuffle) == b)
-    assert(run(SpatialJoin.ShuffleSalted(4)) == b)
-    assert(run(SpatialJoin.ShuffleSalted(16)) == b)
-    // low threshold forces BOTH the cold and the salted-hot path
-    assert(run(SpatialJoin.ShuffleSaltedAdaptive(8, hotThreshold = 50)) == b)
-    // threshold above every count: pure cold path
-    assert(run(SpatialJoin.ShuffleSaltedAdaptive(8, hotThreshold = 1000000)) == b)
+    assert(run(SpatialJoin.Salted(4)) == b)
+    assert(run(SpatialJoin.Salted(16)) == b)
     // Auto on both sides of its threshold: same rows either way
     assert(run(SpatialJoin.Auto()) == b)
     assert(run(SpatialJoin.Auto(maxBroadcastCells = 1)) == b)
     // pre-declared hot set (from a tile-stats relation, the previous-run
-    // artifact): same rows through the hot/cold split, and through the
+    // artifact): same rows through the hot/cold split (a strict subset of
+    // the z4 tiles is hot, so both branches carry rows), and through the
     // empty-set degradation to plain shuffle
     val tstats = tileStatsOf(pts, 4)
     val hotT = SpatialJoin.hotTilesFromStats(tstats, 4, hotThreshold = 10)
     assert(hotT.nonEmpty)
-    assert(run(SpatialJoin.ShuffleSaltedHot(8, hotT, 4)) == b)
-    assert(run(SpatialJoin.ShuffleSaltedHot(8, Nil, 4)) == b)
+    assert(run(salted(8, hotT, 4)) == b)
+    assert(run(salted(8, Nil, 4)) == b)
   }
+
+  private def salted(s: Int, hotTiles: Seq[Long], zoom: Int) =
+    SpatialJoin.Salted(s, Some(SpatialJoin.HotTiles(hotTiles, zoom)))
 
   /** A previous run's per-tile coverage stats, reconstructed from the
     * fixture points (tile_x, tile_y, pages — the persisted flagship
@@ -82,7 +82,7 @@ class PipelineSpec extends SparkTestBase {
       .agg(count("*").as("pages"))
   }
 
-  test("salted-hot plans with ZERO detection jobs; adaptive pays one") {
+  test("salted-hot plans with ZERO detection jobs") {
     val pts = GeoFixtures.points(spark, sfDir)
     val cover = SpatialJoin.coverDF(spark)
     // z=4, threshold 10: a strict subset of the fixture's 192 z4 tiles
@@ -109,23 +109,24 @@ class PipelineSpec extends SparkTestBase {
       val deadline = System.nanoTime() + 10_000_000_000L
       while (jobs <= j0 && System.nanoTime() < deadline) Thread.sleep(20)
     }
-    def countPlanningJobs(mode: SpatialJoin.Mode): Int = {
+    def countPlanningJobs(work: => Any): Int = {
       spark.sparkContext.addSparkListener(listener)
       try {
         flush() // drain events queued before the listener registered
         jobs = 0
-        // construct + resolve the physical plan, NO action
-        SpatialJoin.assignRegions(pts, "k", cover, mode)
-          .queryExecution.executedPlan
+        work
         flush()
         jobs - 1 // minus the marker
       } finally spark.sparkContext.removeSparkListener(listener)
     }
-    // the whole point of ShuffleSaltedHot: skew handling without the
-    // adaptive mode's counting scan of the probe input
-    assert(countPlanningJobs(SpatialJoin.ShuffleSaltedHot(8, hotT, 4)) == 0)
-    // positive control: the same harness sees adaptive's detection job
-    assert(countPlanningJobs(SpatialJoin.ShuffleSaltedAdaptive(8, 50)) >= 1)
+    // the whole point of a declared hot set: skew handling without a
+    // counting scan of the probe input (construct + resolve the physical
+    // plan, NO action)
+    assert(countPlanningJobs(SpatialJoin.assignRegions(pts, "k", cover,
+      salted(8, hotT, 4)).queryExecution.executedPlan) == 0)
+    // positive control: the same harness sees a one-job action run inside
+    // the counting window
+    assert(countPlanningJobs(spark.sparkContext.parallelize(Seq(1), 1).count()) == 1)
 
     // bounded driver list: a hot set larger than maxHot fails loudly
     intercept[IllegalArgumentException] {
@@ -233,11 +234,9 @@ class PipelineSpec extends SparkTestBase {
     assert(base.nonEmpty)
     assert(run(dCover, SpatialJoin.Broadcast) == base)
     assert(run(dCover, SpatialJoin.Shuffle) == base)
-    assert(run(dCover, SpatialJoin.ShuffleSalted(4)) == base)
-    assert(run(dCover, SpatialJoin.ShuffleSaltedAdaptive(4, 50)) == base)
+    assert(run(dCover, SpatialJoin.Salted(4)) == base)
     assert(run(dCover,
-      SpatialJoin.ShuffleSaltedHot(4,
-        SpatialJoin.hotTilesFromStats(tileStatsOf(pts, 4), 4, 10), 4)) == base)
+      salted(4, SpatialJoin.hotTilesFromStats(tileStatsOf(pts, 4), 4, 10), 4)) == base)
   }
 
   test("distributed covers equal driver covers on randomized polygons") {
@@ -346,8 +345,8 @@ class PipelineSpec extends SparkTestBase {
     // explicit modes pass through untouched
     assert(SpatialJoin.resolveMode(SpatialJoin.Shuffle, cover) ==
       SpatialJoin.Shuffle)
-    assert(SpatialJoin.resolveMode(SpatialJoin.ShuffleSalted(4), cover) ==
-      SpatialJoin.ShuffleSalted(4))
+    assert(SpatialJoin.resolveMode(SpatialJoin.Salted(4), cover) ==
+      SpatialJoin.Salted(4))
   }
 
   test("spatial join output is unique per (key, region)") {
@@ -468,8 +467,7 @@ class PipelineSpec extends SparkTestBase {
     // and the contract survives pre-declared hot-cell salting: the
     // conditional-salt join keeps ONE probe consumer (a hot/cold union
     // would add a second scan leaf — the regression this pins)
-    val hotMode = SpatialJoin.ShuffleSaltedHot(4,
-      Seq(graft.core.Cells.encode(10.0, 20.0, 8)), 8)
+    val hotMode = salted(4, Seq(graft.core.Cells.encode(10.0, 20.0, 8)), 8)
     val saltedPlan = Pipeline.coverageStats(spark, pages, 8, hotMode)
       .queryExecution.optimizedPlan
     val saltedScans = saltedPlan.collectLeaves().collect {
@@ -520,7 +518,7 @@ class PipelineSpec extends SparkTestBase {
     assert(outer.length == outer.distinct.length)
   }
 
-  test("assignRegions is mode-independent (broadcast/shuffle/salted/adaptive)") {
+  test("assignRegions is mode-independent (broadcast/shuffle/salted)") {
     val pts = GeoFixtures.points(spark, sfDir)
     val cover = SpatialJoin.coverDF(spark)
     def run(m: SpatialJoin.Mode) =
@@ -530,10 +528,10 @@ class PipelineSpec extends SparkTestBase {
     val base = run(SpatialJoin.Broadcast)
     assert(base.exists(_._2.nonEmpty) && base.exists(_._2.isEmpty))
     assert(run(SpatialJoin.Shuffle) == base)
-    assert(run(SpatialJoin.ShuffleSalted(4)) == base)
-    assert(run(SpatialJoin.ShuffleSaltedAdaptive(4, 50)) == base)
+    assert(run(SpatialJoin.Salted(4)) == base)
     val hotT = SpatialJoin.hotTilesFromStats(tileStatsOf(pts, 4), 4, 10)
-    assert(run(SpatialJoin.ShuffleSaltedHot(4, hotT, 4)) == base)
+    assert(run(salted(4, hotT, 4)) == base)
+    assert(run(salted(4, Nil, 4)) == base)
   }
 }
 

@@ -138,10 +138,34 @@ class ResumeSpec extends SparkTestBase {
     Pipeline.runResumable(spark, pages, out, lin, "runM")
     val dir = new java.io.File(s"$lin-metrics")
     val files = Option(dir.listFiles()).getOrElse(Array.empty)
-    assert(files.nonEmpty, "metrics json missing")
+    assert(files.length == 1, s"expected one metrics record, got ${files.mkString(", ")}")
     val json = java.nio.file.Files.readString(files.head.toPath)
     assert(json.contains("\"run_id\":\"runM\"") && json.contains("\"stages\":["))
     assert(json.contains("\"in_rec\":"), json.take(200))
+    // the record holds every stage of the run: its written records are
+    // exactly the output rows plus the lineage rows
+    val outRec = "\"out_rec\":(\\d+)".r.findAllMatchIn(json).map(_.group(1).toLong).sum
+    val written = spark.read.parquet(out).count() + spark.read.parquet(lin).count()
+    assert(written > 0 && outRec == written, s"out_rec=$outRec written=$written")
+  }
+
+  test("withMetrics: a failing body writes no record, a failing write fails the call") {
+    import graft.plans.Metrics
+    val base = java.nio.file.Files.createTempDirectory("graftmetrics")
+    val path = base.resolve("m/run.json")
+    val e = intercept[IllegalStateException] {
+      Metrics.withMetrics(spark, "boom", path.toString) {
+        spark.range(10).count()
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(!java.nio.file.Files.exists(path))
+    // the record's directory cannot be created under a regular file
+    val file = java.nio.file.Files.writeString(base.resolve("f"), "")
+    intercept[java.io.IOException] {
+      Metrics.withMetrics(spark, "w", file.resolve("run.json").toString)(1)
+    }
   }
 
   test("resume pruning on a stored prefix column prunes partitions at scan") {

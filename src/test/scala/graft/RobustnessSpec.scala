@@ -2,25 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Publish, Similarity, SpatialJoin, TextAnalysis}
-import graft.sources.GeoFixtures
+import graft.operators.{Curation, Publish, Similarity, TextAnalysis}
 
 /** Round-6 robustness items from the r5 verdict/advice: bounded adaptive
-  * hot-detection collects (loud failure, never an unbounded driver list),
-  * null-key capping, null-text unit dedup, null-tag_key publish rows. */
+  * LSH hot-detection collect (loud failure, never an unbounded driver
+  * list), null-key capping, null-text unit dedup, null-tag_key publish
+  * rows. */
 class RobustnessSpec extends SparkTestBase {
   import spark.implicits._
-
-  test("adaptive spatial hot-detection fails loudly past maxHot") {
-    val pts = GeoFixtures.points(spark, sfDir)
-    val e = intercept[IllegalArgumentException] {
-      SpatialJoin.assign(pts, "k", SpatialJoin.coverDF(spark),
-        SpatialJoin.ShuffleSaltedAdaptive(s = 2, hotThreshold = 0, maxHot = 1))
-        .count()
-    }
-    assert(e.getMessage.contains("hotThreshold"))
-    assert(e.getMessage.contains("ShuffleSaltedHot"))
-  }
 
   test("adaptive LSH hot-detection fails loudly past maxHot") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -72,7 +72,7 @@ class StreamingSpec extends SparkTestBase {
       spark.read.parquet(s"$base/out1"), 7, hotThreshold = 10)
     assert(hotT.nonEmpty)
     StreamingTiles.coverageSink(spark, many, s"$base/out3", z = 7,
-        joinMode = SpatialJoin.ShuffleSaltedHot(4, hotT, 7))
+        joinMode = SpatialJoin.Salted(4, Some(SpatialJoin.HotTiles(hotT, 7))))
       .option("checkpointLocation", s"$base/ckpt3").start()
       .awaitTermination(120000)
     val rolled3 = spark.read.parquet(s"$base/out3")

@@ -75,7 +75,7 @@ class TextSpec extends AnyFunSuite with PropHelpers {
         "& &amp; &", "&;&;&;", "&lt<script>x</script>;y").foreach { s =>
       assert(TextExtract.extractTokenCount(b(s)) == twoStep(s), s"golden: $s")
       assert(TextExtract.countTokensAsciiFused(b(s))
-        == TextExtract.countTokensAsciiTwoPass(b(s)), s"ref parity: $s")
+        == TwoPassReference.countTokensAscii(b(s)), s"ref parity: $s")
     }
     // fused == two-pass reference on ASCII fuzz (the string-path oracle is
     // already asserted by the test above; this pins the two byte machines
@@ -88,7 +88,7 @@ class TextSpec extends AnyFunSuite with PropHelpers {
         "&#", "&#x;", "&am", "p;", "&#999999999999;"))
     forAll(Gen.listOfN(30, asciiFrag).map(_.mkString)) { s =>
       assert(TextExtract.countTokensAsciiFused(b(s))
-        == TextExtract.countTokensAsciiTwoPass(b(s)), s)
+        == TwoPassReference.countTokensAscii(b(s)), s)
       assert(TextExtract.extractTokenCount(b(s)) == twoStep(s), s)
     }
     // path selection: high bytes confined to tag/script interiors stay on
@@ -212,5 +212,75 @@ class TextSpec extends AnyFunSuite with PropHelpers {
     // first geo.position wins over later ICBM
     val both = """<meta name="geo.position" content="1;2"><meta name="ICBM" content="3, 4">"""
     assert(Geocode.fromString(both) == Some((1.0, 2.0)))
+  }
+}
+
+/** The pre-fusion ASCII token counter (strip to a buffer, then count), kept
+  * as the parity reference the TextSpec fuzz pins
+  * [[TextExtract.countTokensAsciiFused]] against. PRECONDITION: all-ASCII
+  * input. */
+private object TwoPassReference {
+  def countTokensAscii(s: Array[Byte]): Int = {
+    // pass 1: strip tags + script/style blocks into a byte buffer
+    val buf = new Array[Byte](s.length)
+    var blen = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s(i)
+      if (c == '<') {
+        var dropped = false
+        var w = 0
+        while (!dropped && w < 2) {
+          val name = if (w == 0) "script" else "style"
+          if (TextExtract.startsWithCIB(s, i + 1, name) &&
+              (i + 1 + name.length == s.length ||
+               !TextExtract.isAsciiLetterOrDigit(s(i + 1 + name.length)))) {
+            val close = "</" + name + ">"
+            val end = TextExtract.indexOfCIB(s, i, close)
+            i = if (end < 0) s.length else end + close.length
+            dropped = true
+          }
+          w += 1
+        }
+        if (!dropped) {
+          var gt = i + 1
+          while (gt < s.length && s(gt) != '>') gt += 1
+          i = if (gt >= s.length) s.length else gt + 1
+        }
+      } else {
+        buf(blen) = c; blen += 1
+        i += 1
+      }
+    }
+    // pass 2: entity decode + whitespace collapse, counting only
+    var spaces = 0
+    var pendingSpace = false
+    var started = false
+    @inline def emitCp(cp: Int): Unit = {
+      // int overload == per-char semantics here: all whitespace codepoints
+      // are BMP, and surrogate halves of supplementary chars are never
+      // whitespace either way
+      if (Character.isWhitespace(cp)) { if (started) pendingSpace = true }
+      else {
+        if (pendingSpace) { spaces += 1; pendingSpace = false }
+        started = true
+      }
+    }
+    i = 0
+    while (i < blen) {
+      val c = buf(i)
+      if (c == '&') {
+        var semi = -1
+        var j = i + 1
+        while (semi < 0 && j < blen && j - i <= 10) {
+          if (buf(j) == ';') semi = j
+          j += 1
+        }
+        val cp = if (semi < 0) -1 else TextExtract.entityCodepointAscii(buf, i + 1, semi)
+        if (cp >= 0) { emitCp(cp); i = semi + 1 }
+        else { emitCp('&'); i += 1 }
+      } else { emitCp(c); i += 1 }
+    }
+    spaces + 1
   }
 }
